@@ -139,14 +139,15 @@ class Engine:
             raise TypeNotFound(f"unknown type {type_id!r}")
         return self.registry.get(type_id)
 
-    def _prepare(self, descriptor: Descriptor, flat: dict) -> dict:
+    def _prepare(self, descriptor: Descriptor, flat: dict,
+                 partial: bool = False) -> dict:
         """Infer/evolve the schema from the payload, then validate against
         the evolved descriptor (the reference's consumer.py:61-67 order)."""
         new_fields = descriptor.infer_schema_change(flat)
         if new_fields:
             descriptor.apply_change(new_fields)
             self.registry.save(descriptor)
-        return descriptor.validate(flat)
+        return descriptor.validate(flat, partial=partial)
 
     def _write_row(self, descriptor: Descriptor, validated: dict) -> dict:
         schema = descriptor.spark_schema()
@@ -208,15 +209,18 @@ class Engine:
         self, type_id: str, object_id: str, partial: dict, user: str | None = None
     ) -> dict:
         """PATCH: merge only the provided fields into the existing row
-        (reference ``test_views.py:283-297``)."""
+        (reference ``test_views.py:283-297``). Only the partial is
+        validated and coerced; the stored values are already in storage
+        form, where re-inference would misread them (a DECIMAL number or
+        a JSON-string array infers as ``string``)."""
         self._check(user, type_id, "write")
         descriptor = self._descriptor_or_403(type_id)
         current = flatten_dict(self.get_object(type_id, object_id, user=None))
-        current.update(flatten_dict(partial))
-        current["id"] = str(object_id)
-        validated = self._prepare(descriptor, current)
-        validated["last_modified"] = _now()
-        return unflatten_dict(self._write_row(descriptor, validated))
+        flat = flatten_dict(partial)
+        flat["id"] = str(object_id)
+        current.update(self._prepare(descriptor, flat, partial=True))
+        current["last_modified"] = _now()
+        return unflatten_dict(self._write_row(descriptor, current))
 
     def delete_object(self, type_id: str, object_id: str, user: str | None = None) -> dict:
         """DELETE: remove + echo the removed row (reference ``test_views.py:300-305``)."""

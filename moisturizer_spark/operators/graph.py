@@ -11,26 +11,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# Session conf key guarding every node-grain broadcast hint in this
-# module (VERDICT r10 "What's wrong" #2: the hints bypass
-# autoBroadcastJoinThreshold on frames whose size is argued, not
-# checked). Default ON: the family's broadcast contract — rank/label/
-# degree/survivor/distance frames are NODE-grain, bounded by the node
+# The module's ONE layout setting. Default ON: rank/label/degree/
+# survivor/distance frames are NODE-grain, bounded by the node
 # dimension (~10^7 rows ≈ hundreds of MB), orders of magnitude under
-# the edge dimension. On a deployment whose node dimension can exceed
+# the edge dimension, so every operator broadcasts them into its
+# per-round edge join and persists its edge frame hash-partitioned on
+# the per-round aggregation key. The broadcast hints bypass
+# autoBroadcastJoinThreshold on frames whose size is argued, not
+# checked; on a deployment whose node dimension can exceed
 # driver/executor memory (>~10^7 nodes), set it to "false": every
-# operator then falls back to planner-chosen joins (AQE/SMJ), trading
-# per-round shuffles for unbounded node counts — same results.
+# operator then falls back to planner-chosen joins (AQE/SMJ) on an
+# unpartitioned edge frame, trading per-round shuffles for unbounded
+# node counts — same results.
 BROADCAST_NODE_FRAMES_CONF = "spark.moisturizer.graph.broadcastNodeFrames"
 
 
-def _node_broadcast(df: DataFrame) -> DataFrame:
-    """Apply the node-grain broadcast hint under the documented config
-    guard (see :data:`BROADCAST_NODE_FRAMES_CONF`). All ``broadcast_*``
-    operator flags route through here so the contract — and its
-    escape hatch — live in ONE place."""
+def _layout_on(df: DataFrame) -> bool:
     enabled = df.sparkSession.conf.get(BROADCAST_NODE_FRAMES_CONF, "true")
-    return F.broadcast(df) if str(enabled).lower() != "false" else df
+    return str(enabled).lower() != "false"
+
+
+def _node_broadcast(df: DataFrame) -> DataFrame:
+    """Broadcast a node-grain frame into its edge join, or return it
+    untouched when :data:`BROADCAST_NODE_FRAMES_CONF` is off."""
+    return F.broadcast(df) if _layout_on(df) else df
 
 
 def _keyed_edges(e: DataFrame, key: str) -> DataFrame:
@@ -43,8 +47,11 @@ def _keyed_edges(e: DataFrame, key: str) -> DataFrame:
     satisfied by this ONE setup exchange instead of paying a fresh
     shuffle per round. No explicit partition count: AQE sizes the
     exchange from the data, so the layout is scale-adaptive rather
-    than pinned to the local core count."""
-    return e.repartition(key)
+    than pinned to the local core count. An identity when
+    :data:`BROADCAST_NODE_FRAMES_CONF` is off: without the broadcast
+    the round joins re-shuffle the edges anyway, so the setup
+    exchange would buy nothing."""
+    return e.repartition(key) if _layout_on(e) else e
 
 
 def _grid_header(nodes: DataFrame, scale: int, damping_num: int,
@@ -102,8 +109,6 @@ def _pagerank_setup(
     damping_num: int,
     bound_bits: int,
     assume_distinct: bool = False,
-    broadcast_deg: bool = False,
-    partition_edges: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared preamble: persisted (edge, out-degree) frame, static node
     list, and the 1-row auto-rescale grid header.
@@ -112,15 +117,12 @@ def _pagerank_setup(
     the edge list — when the caller proves its input already simple
     (guide §2.4: a ``distinct`` on already-unique data is a pure
     shuffle tax; the workload's trade edges union two directions of an
-    already-distinct pair set). ``broadcast_deg`` broadcasts the
-    node-grain degree frame into the edge join under the same contract
-    as ``broadcast_ranks`` (node dimension fits a broadcast), removing
-    the two exchanges the degree equi-join otherwise costs.
-    ``partition_edges=True`` persists the edge frame hash-partitioned
-    by ``_dst`` (:func:`_keyed_edges`): combined with
-    ``broadcast_ranks``, every round's contribution aggregate — keyed
-    on ``_dst`` — then reuses that one setup exchange instead of
-    shuffling per round (results identical; partitioning only)."""
+    already-distinct pair set). The node-grain degree frame broadcasts
+    into the edge join, removing the two exchanges the degree equi-join
+    otherwise costs, and the edge frame persists hash-partitioned by
+    ``_dst`` (:func:`_keyed_edges`), so every round's contribution
+    aggregate — keyed on ``_dst`` — reuses that one setup exchange
+    instead of shuffling per round."""
     from moisturizer_spark.operators.common import materialize
 
     e0 = edges.select(
@@ -131,11 +133,7 @@ def _pagerank_setup(
     deg = e0.groupBy("_src").agg(
         F.count(F.lit(1)).cast("bigint").alias("_deg")
     )
-    d_side = _node_broadcast(deg) if broadcast_deg else deg
-    ed = e0.join(d_side, "_src")
-    if partition_edges:
-        ed = _keyed_edges(ed, "_dst")
-    e = materialize(ed)
+    e = materialize(_keyed_edges(e0.join(_node_broadcast(deg), "_src"), "_dst"))
     nodes = materialize(deg.select(F.col("_src").alias("_node")))
     hdr = _grid_header(nodes, scale, damping_num, bound_bits)
     return e, nodes, hdr
@@ -147,7 +145,6 @@ def _pagerank_step(
     ranks: DataFrame,
     damping_num: int,
     damping_den: int,
-    broadcast_ranks: bool,
 ) -> DataFrame:
     """One materialized pagerank round (the lineage-doubling lesson:
     without the per-round boundary the broadcast side AND the
@@ -159,9 +156,7 @@ def _pagerank_step(
     with zero extra joins; :func:`pagerank_int` just drops it."""
     from moisturizer_spark.operators.common import materialize
 
-    r_side = ranks.select(F.col("_node").alias("_src"), "_r")
-    if broadcast_ranks:
-        r_side = _node_broadcast(r_side)
+    r_side = _node_broadcast(ranks.select(F.col("_node").alias("_src"), "_r"))
     contrib = (
         e.join(r_side, "_src")
         .select(
@@ -199,10 +194,8 @@ def pagerank_int(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 10**12,
-    broadcast_ranks: bool = False,
     bound_bits: int = 62,
     assume_distinct: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """ALL-INTEGER PageRank — the det-kmeans determinism recipe applied
     to the iterative-graph family: ranks live on a fixed integer grid
@@ -235,34 +228,26 @@ def pagerank_int(
     sit on exactly ``scale`` — small-graph results are unchanged. The
     oracle mirrors the same bit-length arithmetic.
 
-    Scale plan: the (edge, out-degree) frame is PERSISTED once — every
-    iteration joins it. With ``broadcast_ranks=True`` the node-grain
-    rank frame broadcasts into that join, so each round costs ONE
-    shuffle (the contribution aggregate) and the big edge list never
-    re-shuffles — right whenever the node dimension fits a broadcast
-    (up to ~10^7 nodes). The default shuffles ranks instead —
-    unbounded node counts, two shuffles per round; pre-partition edges
-    by ``src`` on a cluster so the rank join co-locates.
+    Scale plan: the (edge, out-degree) frame is PERSISTED once,
+    hash-partitioned on ``_dst`` — every iteration joins it. The
+    node-grain rank frame broadcasts into that join, so the big edge
+    list never re-shuffles and each round's ``_dst``-keyed contribution
+    aggregate reuses the setup exchange (see
+    :data:`BROADCAST_NODE_FRAMES_CONF` for the node dimension this
+    assumes).
 
     ``assume_distinct=True``: caller guarantees the (src, dst) rows are
     already duplicate-free, skipping the setup dedup shuffle (identical
-    results by construction; guide §2.4). ``partition_edges=True``
-    persists the edge frame hash-partitioned on ``_dst`` so each
-    round's contribution aggregate reuses that one exchange instead of
-    shuffling per round (pair with ``broadcast_ranks``; see
-    :func:`_keyed_edges`)."""
+    results by construction; guide §2.4)."""
     e, nodes, hdr = _pagerank_setup(
         edges, src_col, dst_col, scale, damping_num, bound_bits,
-        assume_distinct=assume_distinct, broadcast_deg=broadcast_ranks,
-        partition_edges=partition_edges,
+        assume_distinct=assume_distinct,
     )
     ranks = nodes.crossJoin(F.broadcast(hdr)).select(
         "_node", F.col("_scale_eff").alias("_r")
     )
     for _ in range(iterations):
-        ranks = _pagerank_step(
-            e, hdr, ranks, damping_num, damping_den, broadcast_ranks
-        )
+        ranks = _pagerank_step(e, hdr, ranks, damping_num, damping_den)
     return ranks.select(
         F.col("_node").alias("node"), F.col("_r").alias("rank_scaled")
     )
@@ -276,10 +261,8 @@ def pagerank_convergence(
     damping_num: int = 85,
     damping_den: int = 100,
     scale: int = 10**12,
-    broadcast_ranks: bool = False,
     bound_bits: int = 62,
     assume_distinct: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """Per-round convergence diagnostic for :func:`pagerank_int` — the
     measurement that turns the fixed iteration count from an article of
@@ -304,17 +287,14 @@ def pagerank_convergence(
     the pagerank rounds compute anyway."""
     e, nodes, hdr = _pagerank_setup(
         edges, src_col, dst_col, scale, damping_num, bound_bits,
-        assume_distinct=assume_distinct, broadcast_deg=broadcast_ranks,
-        partition_edges=partition_edges,
+        assume_distinct=assume_distinct,
     )
     ranks = nodes.crossJoin(F.broadcast(hdr)).select(
         "_node", F.col("_scale_eff").alias("_r")
     )
     reports = []
     for i in range(1, iterations + 1):
-        ranks = _pagerank_step(
-            e, hdr, ranks, damping_num, damping_den, broadcast_ranks
-        )
+        ranks = _pagerank_step(e, hdr, ranks, damping_num, damping_den)
         diff = F.abs(F.col("_r") - F.col("_rp"))
         reports.append(
             ranks.agg(
@@ -342,7 +322,6 @@ def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_degrees: bool = False,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Exact triangle enumeration over an undirected graph — the motif
@@ -364,11 +343,8 @@ def triangle_count(
     output re-canonicalizes to id order, so the orientation is purely
     a physical strategy. The oriented edge list persists once and
     feeds all three join legs; joins are equi-key (never a nested
-    loop). ``broadcast_degrees=True`` broadcasts the node-grain degree
-    frame into the orientation join (the ``pagerank_int
-    broadcast_ranks`` contract: right whenever the node dimension fits
-    a broadcast, up to ~10^7 nodes; the default shuffles instead for
-    unbounded node counts)."""
+    loop). The node-grain degree frame broadcasts into the orientation
+    join (:func:`_node_broadcast`)."""
     from moisturizer_spark.operators.common import materialize
 
     a = F.least(F.col(src_col), F.col(dst_col))
@@ -388,8 +364,7 @@ def triangle_count(
         .groupBy("_n")
         .agg(F.count(F.lit(1)).cast("bigint").alias("_d"))
     )
-    if broadcast_degrees:
-        deg = _node_broadcast(deg)
+    deg = _node_broadcast(deg)
     e = und.join(
         deg.select(F.col("_n").alias("_a"), F.col("_d").alias("_da")), "_a"
     ).join(
@@ -425,9 +400,7 @@ def lpa_communities(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 3,
-    broadcast_labels: bool = False,
     assume_distinct: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """Deterministic SYNCHRONOUS label propagation (Raghavan et al.
     2007) — community detection as bounded unrolled iteration, the
@@ -445,28 +418,20 @@ def lpa_communities(
     Input edges are symmetrized and de-duplicated here; isolated nodes
     (no edges) don't appear. Returns ``(node, community)``.
 
-    Scale: the symmetrized edge list persists once; each round is one
-    equi-join (labels onto edge sources) + two aggregations keyed on
-    the destination node — the (node, label) count and the per-node
-    argmax, which fold map-side. The per-round argmax uses
+    Scale: the symmetrized edge list persists once, hash-partitioned
+    on ``_dst`` (:func:`_keyed_edges`); each round is one equi-join
+    (the broadcast node-grain labels onto edge sources) + two
+    aggregations keyed on the destination node — the (node, label)
+    count and the per-node argmax — which both run exchange-free on
+    the setup partitioning. The per-round argmax uses
     ``min(struct(-count, label))`` so no second shuffle for a window.
     Each round's labels materialize — the pagerank lineage-doubling
-    lesson. ``broadcast_labels=True`` broadcasts the node-grain label
-    frame into each round's edge join (the ``pagerank_int
-    broadcast_ranks`` contract — one shuffle saved per round while the
-    node dimension fits a broadcast, up to ~10^7 nodes).
-    ``assume_distinct=True``: caller proves the input canonical
+    lesson. ``assume_distinct=True``: caller proves the input canonical
     (src < dst, no duplicates), so the symmetrized union is already
-    simple and the setup dedup shuffle is skipped (guide §2.4).
-    ``partition_edges=True``: the persisted symmetrized list is
-    hash-partitioned on ``_dst``, so with ``broadcast_labels`` each
-    round's (node, label) count AND its argmax run exchange-free on
-    the setup partitioning (see :func:`_keyed_edges`)."""
-    e, labels = _lpa_setup(
-        edges, src_col, dst_col, assume_distinct, partition_edges
-    )
+    simple and the setup dedup shuffle is skipped (guide §2.4)."""
+    e, labels = _lpa_setup(edges, src_col, dst_col, assume_distinct)
     for _ in range(iterations):
-        labels = _lpa_step(e, labels, broadcast_labels)
+        labels = _lpa_step(e, labels)
     return labels.select(
         F.col("_node").alias("node"), F.col("_lab").alias("community")
     )
@@ -475,19 +440,17 @@ def lpa_communities(
 def _lpa_setup(
     edges: DataFrame, src_col: str, dst_col: str,
     assume_distinct: bool = False,
-    partition_edges: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared preamble: persisted symmetrized simple edge list + the
     self-labeled initial node frame. ``assume_distinct``: the input is
     canonical (src < dst, duplicate-free), so the symmetrized union
     cannot contain duplicates or self-loops and the dedup shuffle is
-    skipped (guide §2.4) — results identical by construction.
-    ``partition_edges``: persist the symmetrized list hash-partitioned
-    on ``_dst`` (:func:`_keyed_edges`) so each round's two
-    ``_dst``-keyed aggregations ride that one exchange (pair with
-    ``broadcast_labels``); the initial label frame then derives from
-    ``_dst`` — the same node set, the list being symmetric — so its
-    distinct is exchange-free too."""
+    skipped (guide §2.4) — results identical by construction. The list
+    persists hash-partitioned on ``_dst`` (:func:`_keyed_edges`) so
+    each round's two ``_dst``-keyed aggregations ride that one
+    exchange; the initial label frame derives from ``_dst`` — the same
+    node set as ``_src``, the list being symmetric — so its distinct
+    is exchange-free too."""
     from moisturizer_spark.operators.common import materialize
 
     sym = edges.select(
@@ -497,27 +460,22 @@ def _lpa_setup(
             F.col(dst_col).alias("_src"), F.col(src_col).alias("_dst")
         )
     )
-    sym = sym.filter(F.col("_src") != F.col("_dst"))
-    if partition_edges:
-        # partition FIRST: hash(_dst) satisfies the dedup's clustering
-        # requirement ({_dst} ⊆ {_src,_dst}), so the non-assume path
-        # still pays exactly one exchange — now on the reusable key
-        sym = _keyed_edges(sym, "_dst")
+    # partition FIRST: hash(_dst) satisfies the dedup's clustering
+    # requirement ({_dst} ⊆ {_src,_dst}), so the non-assume path still
+    # pays exactly one exchange, on the reusable key
+    sym = _keyed_edges(sym.filter(F.col("_src") != F.col("_dst")), "_dst")
     if not assume_distinct:
         sym = sym.distinct()
     e = materialize(sym)
-    node_src = "_dst" if partition_edges else "_src"
     labels = materialize(
-        e.select(F.col(node_src).alias("_node"))
+        e.select(F.col("_dst").alias("_node"))
         .distinct()
         .withColumn("_lab", F.col("_node"))
     )
     return e, labels
 
 
-def _lpa_step(
-    e: DataFrame, labels: DataFrame, broadcast_labels: bool
-) -> DataFrame:
+def _lpa_step(e: DataFrame, labels: DataFrame) -> DataFrame:
     """One materialized synchronous LPA round: neighbor-label count +
     per-node argmax via ``min(struct(-count, label))`` (no second
     shuffle for a window; materialized per the lineage lesson).
@@ -534,14 +492,11 @@ def _lpa_step(
     list), so the carried column is pure added weight per round."""
     from moisturizer_spark.operators.common import materialize
 
-    l_side = labels.select(F.col("_node").alias("_src"), F.col("_lab"))
-    if broadcast_labels:
-        l_side = _node_broadcast(l_side)
+    l_side = _node_broadcast(
+        labels.select(F.col("_node").alias("_src"), F.col("_lab"))
+    )
     cnt = (
-        e.join(
-            l_side,
-            "_src",
-        )
+        e.join(l_side, "_src")
         .groupBy("_dst", "_lab")
         .agg(F.count(F.lit(1)).cast("bigint").alias("_c"))
     )
@@ -566,9 +521,7 @@ def lpa_convergence(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 3,
-    broadcast_labels: bool = False,
     assume_distinct: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """Per-round convergence diagnostic for :func:`lpa_communities` —
     label-flip counts, the measurement that makes the fixed iteration
@@ -588,18 +541,14 @@ def lpa_convergence(
     Scale: one extra node-grain equi-join + 1-row aggregate per round
     on top of the LPA rounds themselves (a fold-into-the-step variant
     was measured and rejected — see :func:`_lpa_step`)."""
-    e, labels = _lpa_setup(
-        edges, src_col, dst_col, assume_distinct, partition_edges
-    )
+    e, labels = _lpa_setup(edges, src_col, dst_col, assume_distinct)
     reports = []
     for i in range(1, iterations + 1):
-        nxt = _lpa_step(e, labels, broadcast_labels)
+        nxt = _lpa_step(e, labels)
         flipped = F.when(
             F.col("_lab") != F.col("_labp"), F.lit(1)
         ).otherwise(F.lit(0))
-        prev = labels.withColumnRenamed("_lab", "_labp")
-        if broadcast_labels:
-            prev = _node_broadcast(prev)
+        prev = _node_broadcast(labels.withColumnRenamed("_lab", "_labp"))
         reports.append(
             nxt.join(prev, "_node")
             .agg(
@@ -624,8 +573,6 @@ def bfs_levels(
     seed_col: str = "node",
     max_hops: int = 3,
     assume_distinct: bool = False,
-    broadcast_frontier: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """K-hop breadth-first reach: for every node reachable from the
     seed set within ``max_hops`` directed edges, the MINIMUM hop count
@@ -643,23 +590,20 @@ def bfs_levels(
     graph is a driver-convergence loop; pipelines want "within k hops"
     anyway (fraud rings, supply reach, contamination spread).
 
-    ``broadcast_frontier=True``: the frontier and visited frames are
-    NODE-grain (bounded by the reachable node set) — broadcasting them
-    into the expand join and the anti-join keeps the persisted edge
-    list from re-shuffling every hop (the ``pagerank_int
-    broadcast_ranks`` contract, same ``_node_broadcast`` guard).
-    ``partition_edges=True`` persists the edge list hash-partitioned
-    on ``_dst`` so each hop's frontier dedup — keyed on the reached
-    node — reuses that one setup exchange (:func:`_keyed_edges`)."""
+    The frontier and visited frames are NODE-grain (bounded by the
+    reachable node set) and broadcast into the expand join and the
+    anti-join, so the persisted edge list never re-shuffles; it
+    persists hash-partitioned on ``_dst`` so each hop's frontier dedup
+    — keyed on the reached node — reuses that one setup exchange
+    (:func:`_keyed_edges`)."""
     from moisturizer_spark.operators.common import materialize
 
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
+    # partition first: hash(_dst) satisfies the dedup's clustering
+    # requirement, so the non-assume path still pays one exchange
+    e = _keyed_edges(
+        edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")),
+        "_dst",
     )
-    if partition_edges:
-        # partition first: hash(_dst) satisfies the dedup's clustering
-        # requirement, so the non-assume path still pays one exchange
-        e = _keyed_edges(e, "_dst")
     if not assume_distinct:
         # assume_distinct: caller proves the edge rows duplicate-free —
         # the dedup is then a pure shuffle tax (guide §2.4)
@@ -672,11 +616,10 @@ def bfs_levels(
     )
     frontier = visited
     for hop in range(1, max_hops + 1):
-        f_side = frontier.withColumnRenamed("_node", "_src").select("_src")
-        v_side = visited.select("_node")
-        if broadcast_frontier:
-            f_side = _node_broadcast(f_side)
-            v_side = _node_broadcast(v_side)
+        f_side = _node_broadcast(
+            frontier.withColumnRenamed("_node", "_src").select("_src")
+        )
+        v_side = _node_broadcast(visited.select("_node"))
         nxt = (
             e.join(f_side, "_src")
             .select(F.col("_dst").alias("_node"))
@@ -697,8 +640,6 @@ def hits_bipartite(
     dst_col: str = "dst",
     rounds: int = 2,
     assume_distinct: bool = False,
-    broadcast_scores: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a DIRECTED edge
     list, in the all-integer discipline of :func:`pagerank_int` — the
@@ -723,11 +664,9 @@ def hits_bipartite(
     Scale: each half-round is one equi-join of the persisted edge list
     against a node-grain score frame plus one map-combinable sum; score
     frames materialize per half-round (the pagerank lineage lesson).
-    ``broadcast_scores=True`` broadcasts the node-grain hub/authority
-    frames into those joins (the ``pagerank_int broadcast_ranks``
-    contract, same ``_node_broadcast`` guard) so the edge list never
-    re-shuffles mid-round; ``partition_edges=True`` persists the edge
-    list hash-partitioned on ``_d`` (:func:`_keyed_edges`) so the
+    The node-grain hub/authority frames broadcast into those joins so
+    the edge list never re-shuffles mid-round, and the edge list
+    persists hash-partitioned on ``_d`` (:func:`_keyed_edges`) so the
     authority half-round's sum also rides the setup exchange (the hub
     half aggregates on ``_s`` and still shuffles once — keying for
     both sides would need a second persisted copy of the edges)."""
@@ -739,11 +678,12 @@ def hits_bipartite(
             "the authority side undefined"
         )
     d38 = "decimal(38,0)"
-    e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-    if partition_edges:
-        # partition first: hash(_d) satisfies the dedup's clustering
-        # requirement, so the non-assume path still pays one exchange
-        e = _keyed_edges(e, "_d")
+    # partition first: hash(_d) satisfies the dedup's clustering
+    # requirement, so the non-assume path still pays one exchange
+    e = _keyed_edges(
+        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")),
+        "_d",
+    )
     if not assume_distinct:
         # assume_distinct: caller proves the edge rows duplicate-free —
         # the dedup is then a pure shuffle tax (guide §2.4)
@@ -754,15 +694,13 @@ def hits_bipartite(
     )
     a = None
     for _ in range(rounds):
-        h_side = _node_broadcast(h) if broadcast_scores else h
         a = materialize(
-            e.join(h_side, "_s")
+            e.join(_node_broadcast(h), "_s")
             .groupBy("_d")
             .agg(F.sum("_h").cast(d38).alias("_a"))
         )
-        a_side = _node_broadcast(a) if broadcast_scores else a
         h = materialize(
-            e.join(a_side, "_d")
+            e.join(_node_broadcast(a), "_d")
             .groupBy("_s")
             .agg(F.sum("_a").cast(d38).alias("_h"))
         )
@@ -865,9 +803,7 @@ def shortest_paths_bounded(
     weight_col: str = "w",
     node_col: str = "node",
     rounds: int = 3,
-    broadcast_dist: bool = False,
     assume_nonneg_weights: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """Bounded-hop WEIGHTED shortest paths (min-plus Bellman–Ford,
     ``rounds`` relaxations unrolled into the plan): the weighted
@@ -904,14 +840,14 @@ def shortest_paths_bounded(
     int64; ANSI mode raises loudly rather than wraps if a caller
     passes pathological weights.
 
-    ``partition_edges=True`` persists the edge frame hash-partitioned
-    on ``_d`` (:func:`_keyed_edges`): with ``broadcast_dist`` the relax
-    join preserves that partitioning, so the per-round min's big input
-    — the relax rows, the side that scales with edges touched this
-    round — arrives already clustered on the reached node (``_n`` =
-    ``_d``) and only the sparse dist frame's rows land off-key in the
-    union's exchange (guide §2.4). Default off: the plain shape needs
-    no layout contract. (A full-outer ``least``-merge replacing the
+    Layout: the node-grain distance frame broadcasts into the relax
+    join, and the edge frame persists hash-partitioned on ``_d``
+    (:func:`_keyed_edges`). The relax join preserves that
+    partitioning, so the per-round min's big input — the relax rows,
+    the side that scales with edges touched this round — arrives
+    already clustered on the reached node (``_n`` = ``_d``) and only
+    the sparse dist frame's rows land off-key in the union's exchange
+    (guide §2.4). (A full-outer ``least``-merge replacing the
     union+groupBy entirely was also built and MEASURED in round 11
     wave 3 and rejected: +2 jobs per run, no gain over the union's
     map-side partial aggregation — interleaved A/B medians 6.0 vs 6.1 s
@@ -923,14 +859,14 @@ def shortest_paths_bounded(
         raise ValueError(f"rounds must be >= 1 (got {rounds})")
     from moisturizer_spark.operators.common import materialize
 
-    e = edges.select(
-        F.col(src_col).alias("_s"),
-        F.col(dst_col).alias("_d"),
-        F.col(weight_col).cast("bigint").alias("_w"),
-    )
-    if partition_edges:
-        e = _keyed_edges(e, "_d")
-    e = materialize(e)
+    e = materialize(_keyed_edges(
+        edges.select(
+            F.col(src_col).alias("_s"),
+            F.col(dst_col).alias("_d"),
+            F.col(weight_col).cast("bigint").alias("_w"),
+        ),
+        "_d",
+    ))
     if not assume_nonneg_weights:
         # scale-guard allowlist: 1-row scalar over the persisted edge
         # frame
@@ -947,10 +883,7 @@ def shortest_paths_bounded(
         )
     )
     for _ in range(rounds):
-        # broadcast_dist: the reached-node frame is node-grain — under
-        # the pagerank broadcast_ranks contract it broadcasts into the
-        # relax join so the edge frame never re-shuffles per round
-        d_side = _node_broadcast(dist) if broadcast_dist else dist
+        d_side = _node_broadcast(dist)
         relax = d_side.join(e, d_side["_n"] == e["_s"]).select(
             F.col("_d").alias("_n"),
             (F.col("_dist") + F.col("_w")).alias("_dist"),
@@ -970,9 +903,6 @@ def k_core(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_distinct: bool = False,
-    broadcast_alive: bool = False,
-    eager_checkpoints: bool = True,
-    persist_alive: bool = False,
 ) -> DataFrame:
     """Bounded-round k-CORE peeling — the degeneracy member of the
     graph family (Seidman 1983; the standard spam/periphery filter
@@ -996,34 +926,29 @@ def k_core(
     orientation. Exact integer degrees; engine- and partitioning-
     independent.
 
-    ``eager_checkpoints=False`` keeps the per-round ``localCheckpoint``
-    lineage cut (same plan-depth bound) but defers block
-    materialization to the final action: the peel rounds then schedule
-    as one pipelined job cascade instead of ``rounds``+1 serial
-    driver-blocking jobs (VERDICT r10 #3 — the eager chain made each
-    round a synchronous barrier). Identical results; eager stays the
-    default for callers that re-reference the returned frame many
-    times. ``persist_alive=True`` persists each round's survivor set
-    so its degree aggregation runs once instead of once per semi-join
-    probe side — measured a slight LOSS on the broadcast path (r11
-    interleaved A/B, medians over 6 interleaved reps: eager 4.96 vs
-    4.92 s, lazy 4.69 vs 4.62 s; the cache materialization serializes
-    ahead of the two probe builds, which otherwise overlap), so off by
-    default and available for non-broadcast plans where the dual
-    aggregation is a real shuffle."""
+    Lineage: each round's edge frame takes a LAZY ``localCheckpoint``
+    — the same plan-depth bound as an eager one, but block
+    materialization defers to the final action, so the peel rounds
+    schedule as one pipelined job cascade instead of ``rounds``+1
+    serial driver-blocking jobs (VERDICT r10 #3 — the eager chain made
+    each round a synchronous barrier). An eager variant measured no
+    faster (interleaved A/B on ``user_copresence_kcore``, sf0.1, 4
+    cores: medians 2.60 s eager vs 2.60 s lazy, within the spread), so
+    only the lazy path exists. The node-grain survivor set
+    broadcasts into both semi-joins, so the edge frame is never
+    shuffled inside a round, only the degree count is."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k and rounds must be >= 1 (got k={k}, rounds={rounds})")
-    from moisturizer_spark.operators.common import materialize
 
     a, b = F.col(src_col), F.col(dst_col)
-    # Per-round localCheckpoint, NOT the lazy materialize(): each round
+    # Per-round localCheckpoint, NOT materialize(): each round
     # references the previous edge frame ~4x (two adjacency legs + two
     # semi-join probes), so an un-truncated plan grows 4^rounds and the
     # ANALYZER itself OOMs by round 8 (observed: Java heap exhaustion in
-    # the randomized-replay test). localCheckpoint computes the round
-    # eagerly and replaces its lineage with the stored blocks — plan
-    # depth stays O(1) per round, the pagerank-family "per-round
-    # lineage cut" applied where the reference multiplier is highest.
+    # the randomized-replay test). localCheckpoint replaces the round's
+    # lineage with its stored blocks — plan depth stays O(1) per round,
+    # the pagerank-family "per-round lineage cut" applied where the
+    # reference multiplier is highest.
     e = edges.select(
         F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b")
     ).filter(F.col("_a") != F.col("_b"))
@@ -1031,7 +956,7 @@ def k_core(
         # assume_distinct: caller proves the input canonical (src < dst,
         # duplicate-free) — the dedup is a pure shuffle tax (guide §2.4)
         e = e.distinct()
-    e = e.localCheckpoint(eager=eager_checkpoints)
+    e = e.localCheckpoint(eager=False)
     for _ in range(rounds):
         adj = e.select(F.col("_a").alias("_n")).unionAll(
             e.select(F.col("_b").alias("_n"))
@@ -1042,22 +967,12 @@ def k_core(
             .filter(F.col("_d") >= k)
             .select("_n")
         )
-        if persist_alive:
-            # survivor set feeds BOTH semi-join probes; see docstring
-            # for why this is NOT the default on the broadcast path
-            alive = materialize(alive)
-        # broadcast_alive: node-grain survivor set into both semi-joins
-        # — the pagerank broadcast_ranks contract (right while the node
-        # dimension fits a broadcast): the edge frame is then never
-        # shuffled inside a round, only the degree count is
-        side_a = alive.withColumnRenamed("_n", "_a")
-        side_b = alive.withColumnRenamed("_n", "_b")
-        if broadcast_alive:
-            side_a, side_b = _node_broadcast(side_a), _node_broadcast(side_b)
         e = (
-            e.join(side_a, "_a", "left_semi")
-            .join(side_b, "_b", "left_semi")
-            .localCheckpoint(eager=eager_checkpoints)
+            e.join(_node_broadcast(alive.withColumnRenamed("_n", "_a")),
+                   "_a", "left_semi")
+            .join(_node_broadcast(alive.withColumnRenamed("_n", "_b")),
+                  "_b", "left_semi")
+            .localCheckpoint(eager=False)
         )
     adj = e.select(F.col("_a").alias("node")).unionAll(
         e.select(F.col("_b").alias("node"))

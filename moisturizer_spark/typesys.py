@@ -226,13 +226,16 @@ class Descriptor:
         return T.StructType(fields)
 
     # -- validation / coercion ---------------------------------------------
-    def validate(self, flat_obj: dict, default_ts: _dt.datetime | None = None) -> dict:
+    def validate(self, flat_obj: dict, default_ts: _dt.datetime | None = None,
+                 partial: bool = False) -> dict:
         """Validate + coerce one flattened object against the descriptor.
 
         Mirrors the colander bind/deserialize step (reference
         ``moisturizer/schemas.py:45-76``): drop nulls, string-coerce ``id``,
         enforce ``required``, reject type mismatches. Arrays/objects that
-        fell back to string storage are JSON-encoded.
+        fell back to string storage are JSON-encoded. ``partial=True``
+        validates a PATCH body: required fields may be absent, the
+        stored row supplies them.
         """
         out: dict = {}
         if flat_obj.get("id") is not None:
@@ -252,7 +255,7 @@ class Descriptor:
                 )
             out[key] = _coerce(fd, value)
         for key, fd in self.properties.items():
-            if fd.required and key not in out:
+            if fd.required and key not in out and not partial:
                 raise ValidationError(f"missing required field {key!r}")
         if "id" in out:
             out["id"] = str(out["id"])  # reference schemas.py:46-48

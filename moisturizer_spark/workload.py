@@ -8434,13 +8434,10 @@ def trade_pagerank_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranks = pagerank_int(
-        e, iterations=3, scale=10**10, broadcast_ranks=True,
+        e, iterations=3, scale=10**10,
         # e unions both directions of the already-distinct (c*, s*)
         # pair set — duplicate-free by construction (guide §2.4)
         assume_distinct=True,
-        # edge frame persists hash(_dst): all three contribution
-        # aggregates ride ONE setup exchange (guide §2.4)
-        partition_edges=True,
     )
     return ranks.orderBy(
         F.col("rank_scaled").desc(), "node"
@@ -8508,8 +8505,7 @@ def trade_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return pagerank_convergence(
-        e, iterations=3, scale=10**10, broadcast_ranks=True,
-        assume_distinct=True, partition_edges=True,
+        e, iterations=3, scale=10**10, assume_distinct=True,
     ).orderBy("round")
 
 
@@ -8570,13 +8566,7 @@ def trade_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
     )
-    scores = hits_bipartite(
-        edges, rounds=2, assume_distinct=True,
-        # hub/authority frames are node-grain (customers/suppliers) —
-        # broadcastable under the family contract; edges persist
-        # hash(_d) so the authority sums ride the setup exchange
-        broadcast_scores=True, partition_edges=True,
-    ).select(
+    scores = hits_bipartite(edges, rounds=2, assume_distinct=True).select(
         "role", "node", F.col("score").cast("bigint").alias("score")
     )
     rn = F.row_number().over(
@@ -8739,13 +8729,7 @@ def supplier_reach_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    levels = bfs_levels(
-        e, seeds, max_hops=3, assume_distinct=True,
-        # frontier/visited are node-grain (family broadcast contract);
-        # edges persist hash(_dst) so each hop's frontier dedup rides
-        # the setup exchange (guide §2.4)
-        broadcast_frontier=True, partition_edges=True,
-    )
+    levels = bfs_levels(e, seeds, max_hops=3, assume_distinct=True)
     return (
         levels.groupBy(F.col("hops").cast("int").alias("hops"))
         .agg(
@@ -8893,17 +8877,6 @@ def user_copresence_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         rounds=_KCORE_ROUNDS,
         # basket_pairs emits canonical (item_a < item_b) distinct pairs
         assume_distinct=True,
-        # survivor set is user-grain — broadcastable far past any
-        # plausible co-present-user population (the triangle
-        # broadcast_degrees argument)
-        broadcast_alive=True,
-        # lazy per-round checkpoints: same lineage cut, but the 4 peel
-        # rounds schedule as one pipelined cascade instead of 5 serial
-        # driver-blocking jobs (VERDICT r10 #3; r11 interleaved A/B:
-        # med 4.62 vs 4.92 s, min 3.95 vs 4.39 s). The returned frame
-        # is consumed by exactly one action here, the eager default's
-        # multi-reader rationale doesn't apply.
-        eager_checkpoints=False,
     )
     return (
         core.select(
@@ -8953,10 +8926,8 @@ def user_copresence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ("events",))
     edges = _copresence_pairs(t, min_cells=4)
-    # degree frame is user-grain — broadcastable far past any plausible
-    # co-present-user population (the pagerank broadcast_ranks bound)
     tri = triangle_count(
-        edges, src_col="item_a", dst_col="item_b", broadcast_degrees=True,
+        edges, src_col="item_a", dst_col="item_b",
         # basket_pairs emits canonical (item_a < item_b) distinct pairs
         assume_distinct=True,
     )
@@ -9041,11 +9012,7 @@ def user_copresence_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_col="item_a",
         dst_col="item_b",
         iterations=3,
-        broadcast_labels=True,
         assume_distinct=True,
-        # symmetrized edges persist hash(_dst): every round's two
-        # node-keyed aggregations ride ONE setup exchange (guide §2.4)
-        partition_edges=True,
     )
     return (
         labels.groupBy(F.col("community"))
@@ -9096,9 +9063,7 @@ def copresence_lpa_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_col="item_a",
         dst_col="item_b",
         iterations=3,
-        broadcast_labels=True,
         assume_distinct=True,
-        partition_edges=True,
     ).orderBy("round")
 
 
@@ -11497,7 +11462,7 @@ def user_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
     )
     tri = triangle_count(
-        edges, src_col="item_a", dst_col="item_b", broadcast_degrees=True,
+        edges, src_col="item_a", dst_col="item_b",
         # basket_pairs emits canonical (item_a < item_b) distinct pairs
         assume_distinct=True,
     )
@@ -11652,19 +11617,10 @@ def user_behavioral_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seed = we.agg(F.min("src").alias("node"))
     return (
-        # reached-node frame is user-grain — broadcastable under the
-        # family's broadcast_ranks contract; weights are
-        # 10^6 DIV n_both with n_both >= 3 — non-negative by
-        # construction, so the eager validation job is provably
+        # weights are 10^6 DIV n_both with n_both >= 3 — non-negative
+        # by construction, so the eager validation job is provably
         # redundant (assume_distinct-style contract)
-        shortest_paths_bounded(
-            we, seed, rounds=3, broadcast_dist=True,
-            assume_nonneg_weights=True,
-            # edge frame persists hash(dst): each round's min-merge
-            # reads its big (relax) input pre-clustered on the reached
-            # node (guide §2.4; wave-3 A/B 6.44 → 6.12 s median)
-            partition_edges=True,
-        )
+        shortest_paths_bounded(we, seed, rounds=3, assume_nonneg_weights=True)
         .select(F.col("node").alias("user_id"), F.col("dist").alias("dist_micro"))
         .orderBy("dist_micro", "user_id")
         .limit(15)
@@ -12391,7 +12347,7 @@ def trade_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the hub-and-spoke shape LSH banding and skew salting must brace
     for), positive means hubs cluster with hubs. The one-number
     summary that tells the graph family's consumers (PageRank hub
-    caps, triangle `broadcast_degrees`, k-core depth) what topology
+    caps, triangle degree broadcasts, k-core depth) what topology
     they are walking into, plus node count and max degree.
 
     Determinism: degree moments are exact BIGINT sums; the CROSS
@@ -12404,7 +12360,7 @@ def trade_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct over the fact join (persisted — both union branches and
     the degree pass read it once), a degree aggregation keyed on node,
     then the node-grain degree frame (~√|edges| rows, the same size
-    argument as ``triangle_count``'s ``broadcast_degrees``) broadcasts
+    argument as ``triangle_count``'s degree broadcast) broadcasts
     over the edge scan to decorate endpoints — no edge-grain shuffle —
     feeding a 1-row map-side-combinable moment fold."""
     from moisturizer_spark.operators.common import materialize as _mat

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import shutil
 import tempfile
@@ -22,11 +24,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # remaining tests are skipped with an explicit reason (visible in the
 # summary as the skip count), the run completes, and the exit code reflects
 # actual failures only. Budget semantics:
-#   SPARK_GRAFT_TEST_BUDGET_S unset -> 1500 s (fits the driver's window
-#     with headroom; ~85% of tests complete inside it on this host)
+#   SPARK_GRAFT_TEST_BUDGET_S unset -> 1900 s. The tier-1 command in
+#     ROADMAP.md kills pytest at 2670 s; after a trip only the test in
+#     flight (longest ~70 s) and the session teardown still run, so the
+#     run ends near 2000 s, inside that limit and inside the older
+#     35-minute window too. At 1500 s a 4-core host tripped inside the
+#     streaming tests, so host load decided whether they ran at all.
 #   SPARK_GRAFT_TEST_BUDGET_S=0    -> no budget (full certification runs;
 #     the round-close record in OPTIMIZATION_r11.md is produced this way)
-_BUDGET_S = float(os.environ.get("SPARK_GRAFT_TEST_BUDGET_S", "1500"))
+_BUDGET_S = float(os.environ.get("SPARK_GRAFT_TEST_BUDGET_S", "1900"))
 _SESSION_T0 = time.monotonic()
 _BUDGET_TRIPPED = False
 
@@ -66,3 +72,33 @@ def warehouse():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def query_plan(spark, sf_dir):
+    """name -> ``explain("formatted")`` text of a workload query, built
+    once per session and shared by the plan-shape and shuffle-budget
+    tests, which otherwise built every query's plan three times.
+
+    Cold-cache: queries materialize() shared subtrees, and a subtree
+    persisted by an ALPHABETICALLY-EARLIER query substitutes an
+    InMemoryRelation into this query's plan, shifting its shape with
+    suite ORDER (adding url_* queries in round 9 flipped
+    user_clustering_coefficient's Exchange count in full-suite runs
+    only). Plan properties are properties of the query, not of what
+    ran before it."""
+    from moisturizer_spark.workload import QUERIES
+
+    plans: dict[str, str] = {}
+
+    def plan(name: str) -> str:
+        if name not in plans:
+            spark.catalog.clearCache()
+            df = QUERIES[name](spark, sf_dir)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plans[name] = buf.getvalue()
+        return plans[name]
+
+    return plan

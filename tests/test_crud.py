@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -80,6 +81,20 @@ def test_patch_merges_only_provided_fields(engine):
     patched = engine.patch_object("my_type", "42", {"number": 7})
     assert patched["number"] == 7
     assert patched["foo"] == "bar"  # untouched
+    # stored number (DECIMAL) and array (JSON string) fields, and a
+    # required field, survive a PATCH that does not mention them
+    engine.create_type("priced", properties={"foo": {"type": "string", "required": True}})
+    engine.upsert_object("priced", "1", {"foo": "bar", "amount": 1.5, "tags": ["a", "b"]})
+    patched = engine.patch_object("priced", "1", {"amount": 2.25})
+    assert patched["foo"] == "bar" and float(patched["amount"]) == 2.25
+    assert json.loads(patched["tags"]) == ["a", "b"]
+    patched = engine.patch_object("priced", "1", {"foo": "baz"})
+    assert patched["foo"] == "baz" and float(patched["amount"]) == 2.25
+    # a wrong type for an existing field is still a 400
+    with pytest.raises(ValidationError) as e:
+        engine.patch_object("priced", "1", {"amount": "lots"})
+    assert e.value.status == 400
+    assert engine.get_object("priced", "1")["foo"] == "baz"
 
 
 def test_delete_object_echoes_row(engine):

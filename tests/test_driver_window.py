@@ -76,6 +76,30 @@ def _old_text(commit: str, relpath: str) -> str | None:
         return None  # file didn't exist at baseline
 
 
+_LINE_RX = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+\Z")
+
+
+def _segmenter(text: str):
+    """``ast.get_source_segment(text, node)`` with the line split done
+    once: the stdlib re-splits the whole text on every call, which made
+    segmenting the ~14k-line workload module quadratic (~3 min). Same
+    line rule (only CR, LF and CRLF end a line) and the same UTF-8
+    column offsets, so the segments are byte-for-byte the stdlib's."""
+    lines = [ln.encode() for ln in _LINE_RX.findall(text)]
+
+    def segment(node) -> str:
+        first, last = node.lineno - 1, node.end_lineno - 1
+        if first == last:
+            return lines[first][node.col_offset:node.end_col_offset].decode()
+        return "".join(
+            [lines[first][node.col_offset:].decode()]
+            + [ln.decode() for ln in lines[first + 1:last]]
+            + [lines[last][:node.end_col_offset].decode()]
+        )
+
+    return segment
+
+
 def _toplevel_segments(text: str) -> dict[str, str]:
     """name → exact source segment for every top-level def/class/assign.
 
@@ -85,6 +109,7 @@ def _toplevel_segments(text: str) -> dict[str, str]:
     the edit the driver window exists to catch (the driver hashes the
     oracle's output, so a changed oracle NEEDS a fresh row)."""
     tree = ast.parse(text)
+    segment = _segmenter(text)
     out: dict[str, str] = {}
     for node in tree.body:
         names: list[str] = []
@@ -94,11 +119,11 @@ def _toplevel_segments(text: str) -> dict[str, str]:
             names = [t.id for t in node.targets if isinstance(t, ast.Name)]
         elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
             names = [node.target.id]
-        seg = ast.get_source_segment(text, node) or ""
+        seg = segment(node)
         decs = getattr(node, "decorator_list", None)
         if decs:
             seg = (
-                "\n".join(ast.get_source_segment(text, d) or "" for d in decs)
+                "\n".join(segment(d) for d in decs)
                 + "\n"
                 + seg
             )
@@ -133,11 +158,9 @@ import functools
 
 @functools.lru_cache(maxsize=1)
 def _changed_query_names() -> tuple[set[str], str | None]:
-    # cached: the taint diff (git show + AST walk over the ~14k-line
-    # workload module) costs ~2.5 min and BOTH window tests need it —
-    # the suite paid it twice (measured in the r11 full-suite
-    # durations report). Inputs are the on-disk tree + the marker
-    # commit, both fixed for a pytest session.
+    # cached: BOTH window tests need the taint diff (git show + AST
+    # walk over the ~14k-line workload module). Inputs are the on-disk
+    # tree + the marker commit, both fixed for a pytest session.
     base = _baseline_commit()
     if base is None:
         return frozenset(), None

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def _pagerank_ref(edges, iterations=3, scale=10**12, num=85, den=100):
     from collections import defaultdict
@@ -31,12 +33,8 @@ def test_pagerank_int_matches_python_replay(spark):
     from moisturizer_spark.operators.graph import pagerank_int
 
     df = spark.createDataFrame(edges, "src string, dst string")
-    for bcast in (False, True):
-        got = {
-            r["node"]: r["rank_scaled"]
-            for r in pagerank_int(df, broadcast_ranks=bcast).collect()
-        }
-        assert got == _pagerank_ref(edges), f"broadcast_ranks={bcast}"
+    got = {r["node"]: r["rank_scaled"] for r in pagerank_int(df).collect()}
+    assert got == _pagerank_ref(edges)
 
 
 def test_pagerank_int_dangling_nodes_documented_out(spark):
@@ -309,14 +307,11 @@ def test_pagerank_int_auto_rescale_matches_shifted_replay(spark):
     ref, _ = _shifted_ref(edges, bound_bits=bound)
     assert ref != _pagerank_ref(edges), "shift must engage for this test"
     df = spark.createDataFrame(edges, "src string, dst string")
-    for bcast in (False, True):
-        got = {
-            r["node"]: r["rank_scaled"]
-            for r in pagerank_int(
-                df, broadcast_ranks=bcast, bound_bits=bound
-            ).collect()
-        }
-        assert got == ref, f"broadcast_ranks={bcast}"
+    got = {
+        r["node"]: r["rank_scaled"]
+        for r in pagerank_int(df, bound_bits=bound).collect()
+    }
+    assert got == ref
 
 
 def test_pagerank_int_auto_rescale_preserves_ranking(spark):
@@ -349,7 +344,6 @@ def test_pagerank_int_auto_rescale_preserves_ranking(spark):
 def test_pagerank_int_grid_exhaustion_raises(spark):
     """A bound so tight the grid would truncate to zero raises loudly
     (raise_error in the header) instead of silently ranking all-zero."""
-    import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
@@ -465,8 +459,6 @@ def test_lpa_convergence_flags_oscillation(spark):
 
 
 def test_hits_bipartite_rejects_zero_rounds(spark):
-    import pytest
-
     from moisturizer_spark.operators.graph import hits_bipartite
 
     df = spark.createDataFrame([("a", "b")], "src string, dst string")
@@ -602,8 +594,6 @@ def test_shortest_paths_bounded_round_budget_is_hops(spark):
 
 
 def test_shortest_paths_bounded_rejects_zero_rounds(spark):
-    import pytest
-
     from moisturizer_spark.operators.graph import shortest_paths_bounded
 
     edges = spark.createDataFrame([(1, 2, 1)], "src long, dst long, w long")
@@ -616,8 +606,6 @@ def test_shortest_paths_bounded_rejects_negative_weights(spark):
     """ADVICE r08: negative weights yield silently-wrong bounded-hop
     minima (valid bigint sums -- no ANSI error ever fires), so the
     operator must refuse them up front."""
-    import pytest
-
     from moisturizer_spark.operators.graph import shortest_paths_bounded
 
     edges = spark.createDataFrame(
@@ -758,8 +746,6 @@ def test_k_core_matches_python_replay(spark):
 
 
 def test_k_core_rejects_bad_params(spark):
-    import pytest
-
     from moisturizer_spark.operators.graph import k_core
 
     edges = spark.createDataFrame([(1, 2)], "src long, dst long")
@@ -769,11 +755,12 @@ def test_k_core_rejects_bad_params(spark):
         k_core(edges, k=2, rounds=0)
 
 
-# -- round-11 optimization flags: parity + the broadcast-contract guard ------
+# -- the one layout setting: parity + the broadcast-contract guard ------------
 #
-# partition_edges / broadcast_* / eager_checkpoints / persist_alive are
-# physical-layout knobs (guide §2.4/§3/§5) — every one must be a pure
-# no-op on RESULTS. One random graph, every operator, flags on vs off.
+# spark.moisturizer.graph.broadcastNodeFrames switches every operator
+# between the tuned layout (broadcast node frames, edge frames keyed on
+# the per-round aggregation key) and planner-chosen joins. It is a
+# physical choice only: one random graph, every operator, conf on vs off.
 
 
 def _rand_edges(spark, seed, n_nodes=25, n_edges=150):
@@ -788,84 +775,76 @@ def _rand_edges(spark, seed, n_nodes=25, n_edges=150):
     return spark.createDataFrame(rows, "src string, dst string")
 
 
-def test_partition_edges_flags_are_result_noops(spark):
-    from moisturizer_spark.operators.graph import (
-        bfs_levels, hits_bipartite, lpa_communities, pagerank_int,
-    )
+_LAYOUT_CASES = {
+    "pagerank_int": lambda G, g: G.pagerank_int(g["sym"]),
+    "pagerank_convergence": lambda G, g: G.pagerank_convergence(
+        g["sym"], iterations=2),
+    "triangle_count": lambda G, g: G.triangle_count(g["e"]),
+    "lpa_communities": lambda G, g: G.lpa_communities(g["e"]),
+    "lpa_convergence": lambda G, g: G.lpa_convergence(g["e"], iterations=2),
+    "bfs_levels": lambda G, g: G.bfs_levels(g["e"], g["seeds"], max_hops=3),
+    "hits_bipartite": lambda G, g: G.hits_bipartite(g["e"], rounds=2),
+    "shortest_paths_bounded": lambda G, g: G.shortest_paths_bounded(
+        g["we"], g["seeds"], rounds=3),
+    "k_core": lambda G, g: G.k_core(g["e"], k=2, rounds=4),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LAYOUT_CASES))
+def test_layout_conf_is_result_noop(spark, op):
+    """Every graph operator returns identical rows with the layout conf
+    on (the default) and off, including weighted ties and unreached
+    nodes in the shortest-path case."""
+    from pyspark.sql import functions as F
+
+    from moisturizer_spark.operators import graph as G
 
     e = _rand_edges(spark, 7)
-    sym = e.union(e.selectExpr("dst AS src", "src AS dst"))
+    g = {
+        "e": e,
+        "sym": e.union(e.selectExpr("dst AS src", "src AS dst")),
+        "seeds": spark.createDataFrame([("n1",), ("n2",)], "node string"),
+        "we": e.withColumn("w", F.expr("pmod(hash(src, dst), 50)")),
+    }
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+    def rows():
+        return sorted(tuple(r) for r in _LAYOUT_CASES[op](G, g).collect())
 
-    base = rows(pagerank_int(sym, broadcast_ranks=True))
-    assert rows(pagerank_int(
-        sym, broadcast_ranks=True, partition_edges=True)) == base
-
-    base = rows(lpa_communities(e, broadcast_labels=True))
-    assert rows(lpa_communities(
-        e, broadcast_labels=True, partition_edges=True)) == base
-
-    seeds = spark.createDataFrame([("n1",), ("n2",)], "node string")
-    base = rows(bfs_levels(e, seeds, max_hops=3))
-    assert rows(bfs_levels(
-        e, seeds, max_hops=3,
-        broadcast_frontier=True, partition_edges=True)) == base
-
-    base = rows(hits_bipartite(e, rounds=2))
-    assert rows(hits_bipartite(
-        e, rounds=2, broadcast_scores=True, partition_edges=True)) == base
-
-
-def test_k_core_checkpoint_and_persist_flags_are_result_noops(spark):
-    from moisturizer_spark.operators.graph import k_core
-
-    e = _rand_edges(spark, 11)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    base = rows(k_core(e, k=2, rounds=4, broadcast_alive=True))
-    assert rows(k_core(
-        e, k=2, rounds=4, broadcast_alive=True,
-        eager_checkpoints=False)) == base
-    assert rows(k_core(
-        e, k=2, rounds=4, broadcast_alive=True,
-        persist_alive=True)) == base
+    base = rows()
+    assert base, "parity on an empty result proves nothing"
+    try:
+        spark.conf.set(G.BROADCAST_NODE_FRAMES_CONF, "false")
+        off = rows()
+    finally:
+        spark.conf.unset(G.BROADCAST_NODE_FRAMES_CONF)
+    assert off == base
 
 
 def test_node_broadcast_guard_conf(spark):
     """VERDICT r10 #7: the node-grain broadcast contract needs an
     escape hatch. With spark.moisturizer.graph.broadcastNodeFrames
-    false, _node_broadcast is an identity (no hint reaches the
-    planner) and every operator still returns identical results."""
+    false, _node_broadcast and _keyed_edges are identities: no hint or
+    setup exchange reaches the planner, so an edge frame can never be
+    keyed for rounds that re-shuffle it anyway."""
     from moisturizer_spark.operators.graph import (
-        BROADCAST_NODE_FRAMES_CONF, _node_broadcast, pagerank_int,
+        BROADCAST_NODE_FRAMES_CONF, _keyed_edges, _node_broadcast,
     )
 
-    e = _rand_edges(spark, 13)
-    sym = e.union(e.selectExpr("dst AS src", "src AS dst"))
     df = spark.createDataFrame([(1,)], "x int")
-    base = sorted(tuple(r) for r in pagerank_int(
-        sym, broadcast_ranks=True).collect())
     try:
         spark.conf.set(BROADCAST_NODE_FRAMES_CONF, "false")
         assert _node_broadcast(df) is df  # identity: no hint built
-        got = sorted(tuple(r) for r in pagerank_int(
-            sym, broadcast_ranks=True).collect())
-        assert got == base
+        assert _keyed_edges(df, "x") is df  # identity: no exchange
     finally:
         spark.conf.unset(BROADCAST_NODE_FRAMES_CONF)
     assert _node_broadcast(df) is not df  # default: hint applied
+    assert _keyed_edges(df, "x") is not df  # default: keyed layout
 
 
 def test_shortest_paths_assume_nonneg_is_result_noop_and_guard_stays(spark):
     """assume_nonneg_weights skips only the eager validation job; the
     distances are identical, and the default path still rejects a
     negative weight loudly."""
-    import pytest
-
     from moisturizer_spark.operators.graph import shortest_paths_bounded
 
     edges = spark.createDataFrame(
@@ -886,37 +865,3 @@ def test_shortest_paths_assume_nonneg_is_result_noop_and_guard_stays(spark):
     )
     with pytest.raises(ValueError, match="non-negative"):
         shortest_paths_bounded(bad, seed, rounds=1)
-
-
-def test_shortest_paths_partition_edges_is_result_noop(spark):
-    """r11 wave 3: partition_edges persists the edge frame hash(_d) so
-    the per-round min arrives pre-clustered on the reached node. A
-    physical-only change — distances must be bit-identical to the base
-    shape, including weighted ties and unreached-node behavior, on a
-    random weighted graph."""
-    import random
-
-    from moisturizer_spark.operators.graph import shortest_paths_bounded
-
-    rng = random.Random(17)
-    rows = list({
-        (f"n{rng.randrange(25)}", f"n{rng.randrange(25)}")
-        for _ in range(150)
-    })
-    edges = spark.createDataFrame(
-        [(a, b, rng.randrange(0, 50)) for a, b in rows if a != b],
-        "src string, dst string, w long",
-    )
-    seeds = spark.createDataFrame([("n1",), ("n2",)], "node string")
-
-    def rows_of(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    base = rows_of(shortest_paths_bounded(
-        edges, seeds, rounds=3, broadcast_dist=True))
-    assert rows_of(shortest_paths_bounded(
-        edges, seeds, rounds=3, broadcast_dist=True,
-        partition_edges=True)) == base
-    # partitioning without the broadcast contract is equally exact
-    assert rows_of(shortest_paths_bounded(
-        edges, seeds, rounds=3, partition_edges=True)) == base

@@ -20,8 +20,6 @@ justification in the commit message.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
@@ -309,21 +307,8 @@ BUDGETS = {
 _RX = re.compile(r"^\(\d+\) (ReusedExchange|Exchange)", re.M)
 
 
-def _n_exchanges(spark, sf_dir, name: str) -> int:
-    # Cold-cache measurement: queries materialize() shared subtrees, and
-    # a subtree persisted by an ALPHABETICALLY-EARLIER query substitutes
-    # an InMemoryRelation into this query's plan, shifting its Exchange
-    # count with suite ORDER (adding url_* queries in round 9 flipped
-    # user_clustering_coefficient's count in full-suite runs only).
-    # Budgets are properties of the query, not of what ran before it.
-    spark.catalog.clearCache()
-    df = QUERIES[name](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return sum(
-        1 for m in _RX.finditer(buf.getvalue()) if m.group(1) == "Exchange"
-    )
+def _n_exchanges(plan: str) -> int:
+    return sum(1 for m in _RX.finditer(plan) if m.group(1) == "Exchange")
 
 
 def test_every_query_has_a_budget():
@@ -337,8 +322,8 @@ def test_every_query_has_a_budget():
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
-def test_shuffle_budget(name, spark, sf_dir):
-    got = _n_exchanges(spark, sf_dir, name)
+def test_shuffle_budget(name, query_plan):
+    got = _n_exchanges(query_plan(name))
     budget = BUDGETS[name]
     assert got <= budget, (
         f"{name}: plan now has {got} Exchange nodes (budget {budget}) — "

@@ -8,9 +8,6 @@ These inspect `.explain` output only — no query executes.
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -123,17 +120,9 @@ BNLJ_ALLOWED = {
 }
 
 
-def plan_of(spark, sf_dir, name: str) -> str:
-    df = QUERIES[name](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_cartesian_or_surprise_nlj(name, spark, sf_dir):
-    plan = plan_of(spark, sf_dir, name)
+def test_no_cartesian_or_surprise_nlj(name, query_plan):
+    plan = query_plan(name)
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
     if name not in BNLJ_ALLOWED:
         assert "BroadcastNestedLoopJoin" not in plan, (
@@ -142,61 +131,61 @@ def test_no_cartesian_or_surprise_nlj(name, spark, sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_unused_wide_columns_pruned(name, spark, sf_dir):
+def test_unused_wide_columns_pruned(name, query_plan):
     """No workload query reads l_comment / o_comment — the widest columns.
     If they show up in any ReadSchema, column pruning broke."""
-    plan = plan_of(spark, sf_dir, name)
+    plan = query_plan(name)
     assert "l_comment" not in plan, f"{name}: lineitem comment column not pruned"
     assert "o_comment" not in plan, f"{name}: orders comment column not pruned"
 
 
-def test_q1_filter_pushdown(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "q1_pricing_summary")
+def test_q1_filter_pushdown(query_plan):
+    plan = query_plan("q1_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # partial (map-side) aggregation before the exchange
     assert plan.count("HashAggregate") >= 2
 
 
-def test_q5_dimension_joins_broadcast(spark, sf_dir):
+def test_q5_dimension_joins_broadcast(query_plan):
     """region/nation/supplier are dims: the fact side must never shuffle
     for them. Two+ broadcast joins expected in the plan."""
-    plan = plan_of(spark, sf_dir, "q5_region_nation_revenue")
+    plan = query_plan("q5_region_nation_revenue")
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
 
 
-def test_point_filters_reach_parquet(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "docs_winnowing_near_dup")
+def test_point_filters_reach_parquet(query_plan):
+    plan = query_plan("docs_winnowing_near_dup")
     assert "LessThan(doc_id" in plan, "doc_id subset filter not pushed to parquet"
 
 
-def test_exists_decorrelates_to_semi_join(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "orders_with_returns_exists")
+def test_exists_decorrelates_to_semi_join(query_plan):
+    plan = query_plan("orders_with_returns_exists")
     assert "LeftSemi" in plan, "EXISTS subquery not decorrelated to semi join"
     assert "EqualTo(l_returnflag,R)" in plan, "returnflag filter not pushed to scan"
 
 
-def test_anti_join_used_for_without_orders(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "customers_without_orders")
+def test_anti_join_used_for_without_orders(query_plan):
+    plan = query_plan("customers_without_orders")
     assert "LeftAnti" in plan, "expected an anti join, not a filter/subquery plan"
 
 
-def test_doc_median_tokens_stays_jvm_side(spark, sf_dir):
+def test_doc_median_tokens_stays_jvm_side(query_plan):
     """The registered median query must use the built-in aggregate — a
     grouped-agg pandas UDAF here would ship every group's values to
     Python with no partial aggregation (the UDAF template lives in
     functions.median_udaf for extension users, not in the workload)."""
-    plan = plan_of(spark, sf_dir, "doc_median_tokens")
+    plan = query_plan("doc_median_tokens")
     assert "ArrowAggregatePython" not in plan and "AggregateInPandas" not in plan, (
         "pandas UDAF leaked into the median plan"
     )
     assert "median" in plan.lower()
 
 
-def test_q19_brand_prefilter_pushed_to_part_scan(spark, sf_dir):
+def test_q19_brand_prefilter_pushed_to_part_scan(query_plan):
     """The disjunction's common p_brand IN (...) factor must reach the
     part scan (shrinks the broadcast side before shipping), and the
     join itself must stay a broadcast hash join on partkey."""
-    plan = plan_of(spark, sf_dir, "q19_disjunctive_revenue")
+    plan = query_plan("q19_disjunctive_revenue")
     assert "In(p_brand" in plan, "brand prefilter not pushed to part scan"
     assert "BroadcastHashJoin" in plan
 
@@ -241,30 +230,30 @@ def test_runtime_bloom_filter_activates_on_large_scans(spark, sf_dir):
         spark.conf.set(bcast, prev_bcast)
 
 
-def test_q9_part_filter_pushed_and_dims_broadcast(spark, sf_dir):
+def test_q9_part_filter_pushed_and_dims_broadcast(query_plan):
     """The part-family predicate must reach the part scan (shrinking the
     broadcast side before it ships), and part/supplier/nation must all
     broadcast — the fact table never shuffles for a dimension."""
-    plan = plan_of(spark, sf_dir, "q9_product_type_profit")
+    plan = query_plan("q9_product_type_profit")
     assert "StringContains(p_name,gear)" in plan, "p_name filter not pushed"
     assert plan.count("BroadcastHashJoin") >= 3, plan[:2000]
 
 
-def test_q21_no_expand_in_distinct_aggs(spark, sf_dir):
+def test_q21_no_expand_in_distinct_aggs(query_plan):
     """Q21's two distinct-supplier counts must stay SEPARATE single-
     distinct aggregates (each plans as a two-level partial agg). Folding
     them into one groupBy looks tidier but makes Catalyst emit an Expand
     that triples the aggregate input — measured ~25% slower end-to-end
     at sf0.1 (see the query docstring for the rejected alternatives)."""
-    plan = plan_of(spark, sf_dir, "q21_waiting_suppliers")
+    plan = query_plan("q21_waiting_suppliers")
     tree = plan.split("\n\n", 1)[0]
     assert "Expand" not in tree, f"Expand leaked into the q21 plan:\n{tree}"
 
 
-def test_shard_manifest_single_scan_single_shuffle(spark, sf_dir):
+def test_shard_manifest_single_scan_single_shuffle(query_plan):
     """Shard assignment is a map-side md5 projection: one corpus scan,
     partial aggregation before the only (16-group) exchange."""
-    plan = plan_of(spark, sf_dir, "corpus_shard_manifest")
+    plan = query_plan("corpus_shard_manifest")
     tree = plan.split("\n\n", 1)[0]
     assert tree.count("Scan parquet") == 1, tree
     assert plan.count("HashAggregate") >= 2, "no map-side partial agg"
@@ -272,10 +261,10 @@ def test_shard_manifest_single_scan_single_shuffle(spark, sf_dir):
     assert tree.count("Exchange") <= 2, tree
 
 
-def test_quality_funnel_single_scan_no_join(spark, sf_dir):
+def test_quality_funnel_single_scan_no_join(query_plan):
     """The rule cascade is one CASE projection: a single scan, no joins,
     partial agg before the (source, stage) exchange."""
-    plan = plan_of(spark, sf_dir, "docs_quality_funnel")
+    plan = query_plan("docs_quality_funnel")
     tree = plan.split("\n\n", 1)[0]
     assert tree.count("Scan parquet") == 1, tree
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
@@ -283,21 +272,21 @@ def test_quality_funnel_single_scan_no_join(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_containment_eval_side_broadcasts(spark, sf_dir):
+def test_containment_eval_side_broadcasts(query_plan):
     """Both eval-side frames (gram set, per-item gram counts) must
     broadcast — the corpus side probes map-side and never shuffles its
     grams before the hit aggregation."""
-    plan = plan_of(spark, sf_dir, "docs_benchmark_containment")
+    plan = query_plan("docs_benchmark_containment")
     assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
     assert "SortMergeJoin" not in plan
 
 
-def test_remove_dup_spans_plan_shape(spark, sf_dir):
+def test_remove_dup_spans_plan_shape(query_plan):
     """The span-removal plan must stay linear: ONE scan of documents, no
     join of token rows against span rows, and exactly the three
     shuffles the algorithm needs (gram ranking, doc window+reassembly,
     final presentation sort)."""
-    plan = plan_of(spark, sf_dir, "docs_remove_dup_spans")
+    plan = query_plan("docs_remove_dup_spans")
     tree = plan.split("\n\n", 1)[0]  # formatted mode: tree, blank, details
     assert tree.count("Scan parquet") == 1, tree
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):

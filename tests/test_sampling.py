@@ -263,24 +263,35 @@ def test_weighted_sample_excludes_nonpositive_weights(spark):
 def test_weighted_sample_inclusion_tracks_weight(spark):
     """A-ES law: across independent draws (salts), the heavy item must
     win top-1 roughly w_heavy/Σw of the time. With w=(8,1,1) over 300
-    salts, heavy's win count is Binomial(300, 0.8): ±5σ ≈ ±35."""
+    salts, heavy's win count is Binomial(300, 0.8): ±5σ ≈ ±35.
+
+    The score hashes ``salt || key``, so the 300 draws run as ONE
+    grouped sample whose key carries the salt (``by`` the draw index,
+    empty salt) — the same md5 inputs as 300 separate calls, in one
+    window instead of 300. The first draws are cross-checked against
+    the per-salt calls to pin that equivalence."""
     from moisturizer_spark.operators.sampling import weighted_sample
 
     df = spark.createDataFrame(
         [(1, 8), (2, 1), (3, 1)], "doc_id long, w long"
     )
-    wins = 0
-    frames = []
-    for s in range(300):
-        frames.append(
-            weighted_sample(
-                df, n=1, weight_col="w", key_col="doc_id", salt=f"t{s}:"
-            ).select("doc_id")
-        )
-    from functools import reduce
-
-    allw = reduce(lambda a, b: a.unionAll(b), frames).collect()
-    wins = sum(1 for r in allw if r.doc_id == 1)
+    draws = df.crossJoin(spark.range(300).withColumnRenamed("id", "s"))
+    draws = draws.withColumn(
+        "k", F.concat(F.lit("t"), "s", F.lit(":"), "doc_id")
+    )
+    winner = {
+        r.s: r.doc_id
+        for r in weighted_sample(
+            draws, n=1, weight_col="w", key_col="k", by=("s",), salt=""
+        ).select("s", "doc_id").collect()
+    }
+    assert sorted(winner) == list(range(300))
+    for s in range(3):
+        (one,) = weighted_sample(
+            df, n=1, weight_col="w", key_col="doc_id", salt=f"t{s}:"
+        ).collect()
+        assert one.doc_id == winner[s], s
+    wins = sum(1 for d in winner.values() if d == 1)
     assert 240 - 35 <= wins <= 240 + 35, wins
 
 
