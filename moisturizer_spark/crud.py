@@ -177,7 +177,7 @@ class Engine:
         rows = table.lookup(str(object_id)).limit(1).collect()
         if not rows:
             raise ObjectNotFound(f"{type_id}/{object_id}")
-        return unflatten_dict({k: v for k, v in rows[0].asDict().items() if v is not None})
+        return _as_object(rows[0])
 
     def list_objects(self, type_id: str, user: str | None = None) -> list[dict]:
         """GET collection: full scan (reference ``test_views.py:222-231``)."""
@@ -186,10 +186,7 @@ class Engine:
         table = self.registry.table(type_id)
         if not table.exists():
             return []
-        return [
-            unflatten_dict({k: v for k, v in r.asDict().items() if v is not None})
-            for r in table.read().collect()
-        ]
+        return [_as_object(r) for r in table.read().collect()]
 
     def upsert_object(
         self, type_id: str, object_id: str, obj: dict, user: str | None = None
@@ -225,10 +222,15 @@ class Engine:
     def delete_object(self, type_id: str, object_id: str, user: str | None = None) -> dict:
         """DELETE: remove + echo the removed row (reference ``test_views.py:300-305``)."""
         self._check(user, type_id, "write")
-        row = self.get_object(type_id, object_id, user=None)
-        # point delete: reads + rewrites only the bucket owning the id
-        self.registry.table(type_id).delete_by_key([str(object_id)])
-        return row
+        self._descriptor_or_403(type_id)
+        table = self.registry.table(type_id)
+        # point delete: reads + rewrites only the bucket owning the id, and
+        # its collected rows are the echo (no separate read); a missing id
+        # rewrites nothing
+        rows = table.delete_by_key([str(object_id)]) if table.exists() else []
+        if not rows:
+            raise ObjectNotFound(f"{type_id}/{object_id}")
+        return _as_object(rows[0])
 
     def object_changes(
         self,
@@ -339,9 +341,8 @@ class Engine:
         ]
 
     def delete_user(self, user_id: str) -> dict:
-        row = self.get_user(user_id)
-        self.registry.table(_USERS_TYPE).delete_by_key([str(user_id)])
-        return row
+        row = self.delete_object(_USERS_TYPE, user_id)
+        return {k: v for k, v in row.items() if k != "password"}
 
     def authenticate(self, user_id: str, api_key: str) -> dict:
         """Basic-auth resolve (reference ``test_views.py:33-47``)."""
@@ -401,6 +402,12 @@ class Engine:
             users_ok = False
         server_ok = self.spark.sparkContext is not None
         return {"server": server_ok, "schema": schema_ok, "users": users_ok}
+
+
+def _as_object(row: Row) -> dict:
+    """A stored row as the API returns it: NULL fields omitted, flattened
+    ``a__b`` columns nested back."""
+    return unflatten_dict({k: v for k, v in row.asDict().items() if v is not None})
 
 
 def _validation_guard(obj: dict) -> None:

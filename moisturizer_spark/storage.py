@@ -25,7 +25,11 @@ Layout — a miniature transactional table format:
   without a scan.
 * The manifest maps bucket → list of data directories, plus the table
   schema and the previous version's directories (kept as a grace set for
-  in-flight readers). Commit = write-temp + ``os.replace`` of one small
+  in-flight readers). Reads hand that schema to the parquet reader, so a
+  scan plans without a schema-inference job: files written before an
+  add-only column read it as NULL, and files written before a column's
+  type widened read as the wider type (the commit records the widening,
+  see ``_merge_schemas``). Commit = write-temp + ``os.replace`` of one small
   JSON file: readers see the old or the new version, never a half-written
   table, and a crash between data write and manifest swap leaves only
   unreferenced orphan files (vacuumed by the next commit).
@@ -56,7 +60,7 @@ import shutil
 import uuid
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Row, SparkSession, Window, functions as F, types as T
 
 # Incoming rows beat existing rows on last_modified ties (LWW upsert).
 _PRECEDENCE_COL = "__precedence"
@@ -263,10 +267,10 @@ class ParquetTable:
         if not rel_dirs:
             return self.spark.createDataFrame([], schema)
         paths = [os.path.join(self.path, d) for d in rel_dirs]
-        # mergeSchema: untouched buckets may predate add-only evolved
-        # columns; project to manifest schema for stable column order.
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        return _with_missing(df, schema, [f.name for f in schema.fields])
+        # The manifest schema is the table schema (column order included),
+        # so no footer-merging job runs: the reader fills columns a file
+        # predates with NULL and widens older files' narrower types.
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _read_buckets(self, bucket_ids, man: dict) -> DataFrame:
         dirs = []
@@ -570,21 +574,23 @@ class ParquetTable:
         )
 
     # -- deletes ------------------------------------------------------------
-    def delete_by_key(self, values) -> DataFrame:
+    def delete_by_key(self, values) -> list[Row]:
         """Point delete: touches only the buckets owning ``values``
-        (computed driver-side — no scan of the rest of the table). Echoes
-        the deleted rows (reference ``tests/test_views.py:300-305``)."""
+        (computed driver-side — no scan of the rest of the table). Returns
+        the deleted rows as the list already collected on the driver (the
+        echo, reference ``tests/test_views.py:300-305``): a DataFrame over
+        them would cost a Spark job to read back."""
         values = [str(v) for v in values]
         man = self._load_manifest()
         if man is None:
-            return self.delete_where(F.col(self.key).isin(values))
+            return self.delete_where(F.col(self.key).isin(values)).collect()
         buckets = sorted({self.bucket_of(v) for v in values})
         sub = self._read_buckets(buckets, man)
         cond = F.col(self.key).isin(values)
         rows = sub.filter(cond).collect()
-        kept = sub.filter(~cond)
-        self._rewrite_buckets(buckets, kept, man)
-        return self.spark.createDataFrame(rows, sub.schema)
+        if rows:  # no match: no rewrite, no new version
+            self._rewrite_buckets(buckets, sub.filter(~cond), man)
+        return rows
 
     def delete_where(self, condition, echo: bool = True,
                      echo_limit: int = 100_000) -> DataFrame:
@@ -718,7 +724,7 @@ class ParquetTable:
         if not changed:
             return empty
         old = _with_missing(self._read_buckets(changed, man_old), schema_new, cols)
-        new = _with_missing(self._read_buckets(changed, man_new), schema_new, cols)
+        new = self._read_buckets(changed, man_new)
         k = self.key
         if k not in cols:  # keyless (append-only log): emit adds only
             return new.exceptAll(old).select(
@@ -840,17 +846,45 @@ def _strip_internal(schema: T.StructType) -> T.StructType:
 def _merge_schemas(prev: dict | None, new_schema: T.StructType) -> T.StructType:
     """Union of the previous manifest schema and the new write's schema
     (add-only evolution: carried-over buckets keep columns the new write
-    may not repeat, and vice versa)."""
+    may not repeat, and vice versa).
+
+    A column both schemas hold takes the wider of its two types. Reads
+    pass this schema to the parquet reader, which can widen a file's
+    narrower type but never narrow a wider one, and a MERGE's union
+    writes the widened type (DECIMAL(10,2) ∪ DECIMAL(12,2) files as
+    DECIMAL(12,2)) while untouched buckets keep the old one."""
     new_schema = _strip_internal(new_schema)
     if prev is None:
         return new_schema
     old = T.StructType.fromJson(json.loads(prev["schema"]))
-    merged = list(old.fields)
+    new_types = {f.name: f.dataType for f in new_schema.fields}
+    merged = [
+        T.StructField(f.name, _wider_type(f.dataType, new_types[f.name]),
+                      f.nullable, f.metadata)
+        if f.name in new_types else f
+        for f in old.fields
+    ]
     seen = {f.name for f in merged}
     for f in new_schema.fields:
         if f.name not in seen:
             merged.append(f)
     return T.StructType(merged)
+
+
+_INTEGRAL_RANK = {T.ByteType: 0, T.ShortType: 1, T.IntegerType: 2, T.LongType: 3}
+
+
+def _wider_type(old: T.DataType, new: T.DataType) -> T.DataType:
+    """The type that files of either type read back as: Spark's union
+    widening for decimals and integers. Any other pair keeps ``old``."""
+    if isinstance(old, T.DecimalType) and isinstance(new, T.DecimalType):
+        scale = max(old.scale, new.scale)
+        digits = max(old.precision - old.scale, new.precision - new.scale)
+        return T.DecimalType(min(38, digits + scale), scale)
+    ranks = (_INTEGRAL_RANK.get(type(old)), _INTEGRAL_RANK.get(type(new)))
+    if None not in ranks and ranks[1] > ranks[0]:
+        return new
+    return old
 
 
 def _with_missing(df: DataFrame, other_schema: T.StructType, ordered: list[str]) -> DataFrame:

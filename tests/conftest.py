@@ -6,6 +6,7 @@ import os
 import shutil
 import tempfile
 import time
+import uuid
 
 import pytest
 
@@ -102,3 +103,22 @@ def query_plan(spark, sf_dir):
         return plans[name]
 
     return plan
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` under a fresh Spark job group and
+    returns ``(result, number of jobs it ran)``."""
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+
+    def run(fn):
+        group = f"count_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            result = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return result, len(tracker.getJobIdsForGroup(group))
+
+    return run

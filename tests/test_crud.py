@@ -105,6 +105,43 @@ def test_delete_object_echoes_row(engine):
         engine.get_object("my_type", "42")
 
 
+def test_delete_missing_object_404_commits_nothing(engine):
+    engine.upsert_object("my_type", "42", CANONICAL)
+    table = engine.registry.table("my_type")
+    version = table._load_manifest()["version"]
+    with pytest.raises(ObjectNotFound) as e:
+        engine.delete_object("my_type", "nope")
+    assert e.value.status == 404
+    assert table._load_manifest()["version"] == version
+    with pytest.raises(ObjectNotFound):
+        engine.delete_user("ghost")
+
+
+def _evolved_type(engine):
+    """Two objects over two commits; the second adds a column."""
+    engine.upsert_object("jobs_t", "a", {"foo": "x", "number": 1})
+    engine.upsert_object("jobs_t", "b", {"foo": "y", "number": 2, "extra": {"k": True}})
+    assert engine.registry.table("jobs_t")._load_manifest()["version"] == 2
+
+
+def test_get_object_runs_one_job(engine, count_jobs):
+    _evolved_type(engine)
+    got, jobs = count_jobs(lambda: engine.get_object("jobs_t", "b"))
+    assert got["extra"] == {"k": True}
+    assert jobs == 1, f"GET ran {jobs} jobs, want 1 (no schema inference)"
+
+
+def test_delete_object_reads_the_row_once(engine, count_jobs):
+    """One job reads the owning bucket and collects the echo, two write
+    the rewritten bucket (its shuffle, then the file write)."""
+    _evolved_type(engine)
+    deleted, jobs = count_jobs(lambda: engine.delete_object("jobs_t", "a"))
+    assert deleted == {k: v for k, v in deleted.items() if v is not None}
+    assert deleted["foo"] == "x" and deleted["id"] == "a"
+    assert jobs == 3, f"DELETE ran {jobs} jobs, want 3"
+    assert engine.delete_user("admin")["id"] == "admin"
+
+
 def test_delete_collection_truncates_and_echoes(engine):
     engine.create_object("my_type", CANONICAL)
     engine.create_object("my_type", {"foo": "two", "number": 2})

@@ -242,7 +242,7 @@ def test_delete_by_key_touches_one_bucket(spark, warehouse):
     table.overwrite(df)
     before = _data_files(table)
     echoed = table.delete_by_key(["7"])
-    assert [r["id"] for r in echoed.collect()] == ["7"]
+    assert [r["id"] for r in echoed] == ["7"]
     after = _data_files(table)
     assert len(set(before) - set(after)) == 1, "exactly one bucket rewritten"
     assert table.read().count() == 999
